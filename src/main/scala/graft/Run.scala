@@ -28,7 +28,12 @@ object Run {
       // finds the lock held and exits without side effects
       etl.DailyIngest.runLocked(spark, inputDir, date, workDir) match {
         case Some(m) =>
-          println(s"""{"file":"${m.fileName}","rows":${m.totalRows},"bytes":${m.totalBytes},"seconds":${m.totalTimeSeconds}}""")
+          val phases = m.phaseSeconds.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+          println(s"""{"file":"${m.fileName}","rows":${m.totalRows},"bytes":${m.totalBytes},""" +
+            s""""seconds":${m.totalTimeSeconds},"rows_promoted":${m.rowsPromoted},""" +
+            s""""rows_skipped_dup":${m.rowsSkippedDup},"partitions_appended":${m.partitionsAppended},""" +
+            s""""retention_rows":${m.retentionRows},"retention_partitions":${m.retentionPartitions},""" +
+            s""""phase_seconds":$phases}""")
         case None =>
           println(s"""{"skipped":"lock held","workDir":"$workDir"}""")
       }

@@ -27,6 +27,13 @@ object Notify {
     * run exceeds it, the notification subject and body carry an explicit
     * SLA-EXCEEDED marker (the Functions host would have killed the run; the
     * library surfaces the breach instead of silently running long).
+    *
+    * The daily run also reports where its rows and time went (all default
+    * to empty for other callers, such as `Cleanup`): rows promoted into the
+    * final table and rows skipped because their key was already there,
+    * partitions that received rows, rows and partitions dropped by
+    * retention, and seconds per phase in run order (land, promote,
+    * aggregate, retention, archive).
     */
   final case class RunMetrics(
       fileName: String,
@@ -35,7 +42,13 @@ object Notify {
       totalRows: Long,
       totalBytes: Long,
       totalTimeSeconds: Double,
-      slaSeconds: Double = Double.PositiveInfinity) {
+      slaSeconds: Double = Double.PositiveInfinity,
+      rowsPromoted: Long = 0L,
+      rowsSkippedDup: Long = 0L,
+      partitionsAppended: Long = 0L,
+      retentionRows: Long = 0L,
+      retentionPartitions: Long = 0L,
+      phaseSeconds: Seq[(String, Double)] = Nil) {
     def slaExceeded: Boolean = totalTimeSeconds > slaSeconds
   }
 

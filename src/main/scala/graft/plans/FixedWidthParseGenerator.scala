@@ -62,6 +62,16 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
       }
     }.toSeq)
 
+  /** One typed row per record of the packed input row, emitted lazily.
+    *
+    * Consumption contract: single pass, copy before advance. Every element
+    * the iterator returns is the SAME mutable row, overwritten by the next
+    * `next()`. A consumer must copy or project each row before advancing
+    * (GenerateExec's iterator path projects each to a fresh UnsafeRow) and
+    * must traverse the result once. Buffering it, e.g. `eval(r).iterator
+    * .toSeq` in a test, aliases every element to the last record; tests
+    * should go through the SQL engine or copy each row.
+    */
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val s = child.eval(input).asInstanceOf[UTF8String]
     if (s == null || s.numBytes == 0) return Nil

@@ -29,6 +29,22 @@ class SinksSpec extends SparkSpec {
     assert(new java.io.File(src).exists(), "existing destination must skip the move")
   }
 
+  test("archive move completes over a partial copy left by a crash, and removes the source") {
+    val work = tmpDir("archivecrash")
+    val name = "R520.20240115_000000.20240115000000.zip"
+    val src = s"$work/$name"
+    Files.writeString(java.nio.file.Paths.get(src), "full payload")
+    // a copy cut short: only the dot-prefixed sibling exists, truncated
+    val dayDir = new java.io.File(s"$work/backup/Daily/2024/20240115")
+    assert(dayDir.mkdirs())
+    Files.writeString(new java.io.File(dayDir, s".$name.tmp").toPath, "full")
+    val dst = Sinks.archiveFile(spark, src, s"$work/backup")
+    assert(Files.readString(java.nio.file.Paths.get(dst.stripPrefix("file:"))) == "full payload")
+    assert(!new java.io.File(src).exists(), "the source must be removed once archived")
+    assert(!new java.io.File(dayDir, s".$name.tmp").exists(), "the partial copy is replaced")
+    assert(dayDir.list().filterNot(_.endsWith(".crc")).toSeq == Seq(name))
+  }
+
   test("archive move rejects filenames without a date at [5:13] (main.py:358-364)") {
     val work = tmpDir("archive2")
     val src = s"$work/badname.zip"
@@ -71,6 +87,52 @@ class SinksSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/business_date=2024-01-02").exists())
     assert(!new java.io.File(s"$out/business_date=2024-01-03").exists())
     assert(spark.read.parquet(out).count() == 5)
+  }
+
+  test("retentionDropPartitions counts expired rows from footers, equal to a Spark count") {
+    import spark.implicits._
+    val out = tmpDir("retentionfooter") + "/t"
+    def day(d: String, vs: Range) = vs.map(v => (d, v)).toDF("business_date", "v")
+      .withColumn("business_date", to_date(col("business_date")))
+    Sinks.writeDatePartitioned(day("2024-01-08", 1 to 3), "business_date", out)
+    // expired day appended twice, as append promote leaves it: two files
+    day("2024-01-03", 1 to 7).coalesce(1).write.mode("append").partitionBy("business_date").parquet(out)
+    day("2024-01-03", 8 to 10).coalesce(1).write.mode("append").partitionBy("business_date").parquet(out)
+    day("2024-01-04", 1 to 4).coalesce(1).write.mode("append").partitionBy("business_date").parquet(out)
+    val expired = Seq("2024-01-03", "2024-01-04").map(d => s"$out/business_date=$d")
+    assert(new java.io.File(expired.head).list().count(_.startsWith("part-")) == 2)
+    val sparkCount = spark.read.option("basePath", out).parquet(expired: _*).count()
+    val (rows, parts) = Sinks.retentionDropPartitions(
+      spark, out, "business_date", java.sql.Date.valueOf("2024-01-10"))
+    assert(sparkCount == 14 && rows == sparkCount && parts == 2)
+    assert(spark.read.parquet(out).count() == 3)
+  }
+
+  test("appendPartitions renames new partitions in whole and files into existing ones") {
+    import spark.implicits._
+    val work = tmpDir("append")
+    def day(d: String, vs: Range) = vs.map(v => (d, v)).toDF("business_date", "v")
+      .withColumn("business_date", to_date(col("business_date")))
+    def write(df: org.apache.spark.sql.DataFrame, dir: String) =
+      df.coalesce(1).write.mode("overwrite").partitionBy("business_date").parquet(dir)
+    // a table that does not exist yet is the staged dir, renamed
+    write(day("2024-01-01", 1 to 2), s"$work/staged")
+    val first = Sinks.appendPartitions(spark, s"$work/staged", s"$work/t")
+    assert(first.filled.map(_.getName) == Seq("business_date=2024-01-01"))
+    write(day("2024-01-01", 3 to 4).union(day("2024-01-03", 5 to 6)), s"$work/staged")
+    val oldFile = new java.io.File(s"$work/t/business_date=2024-01-01").list().filter(_.startsWith("part-")).toSet
+    val a = Sinks.appendPartitions(spark, s"$work/staged", s"$work/t")
+    assert(a.filled.map(_.getName).sorted == Seq("business_date=2024-01-01", "business_date=2024-01-03"))
+    assert(a.listed.map(_.getName).sorted == a.filled.map(_.getName).sorted)
+    assert(!new java.io.File(s"$work/staged").exists())
+    val files = new java.io.File(s"$work/t/business_date=2024-01-01").list().filter(_.startsWith("part-")).toSet
+    assert(files.size == 2 && oldFile.subsetOf(files), "existing files stay, the staged one joins them")
+    assert(spark.read.parquet(s"$work/t").agg(sum("v")).head.getLong(0) == (1 to 6).sum)
+    assert(Sinks.latestDate(spark, a, "business_date").contains(java.time.LocalDate.of(2024, 1, 3)))
+    // a newer directory emptied by an interrupted delete is not the latest
+    assert(new java.io.File(s"$work/t/business_date=2024-01-09").mkdirs())
+    val withEmpty = a.copy(listed = a.listed :+ new org.apache.hadoop.fs.Path(s"$work/t/business_date=2024-01-09"))
+    assert(Sinks.latestDate(spark, withEmpty, "business_date").contains(java.time.LocalDate.of(2024, 1, 3)))
   }
 
   test("compaction rewrites only fragmented partitions; content identical, compliant days untouched") {
