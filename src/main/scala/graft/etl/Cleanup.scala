@@ -19,6 +19,9 @@ import graft.util.Clock
   * non-partitioned table falls back to filter + staged rewrite + atomic
   * swap ([[Sinks.retentionRewrite]] semantics).
   *
+  * A `tableDir` on a local file system is read and changed through the
+  * fork-free `niocrc://` scheme ([[graft.util.NioLocalFileSystem.forkFree]]).
+  *
   * `asOf` defaults to max(dateCol) in the data, never the wall clock —
   * the one-clock fix for the reference's local-server-clock bug
   * (daily_cleanup.py:22, SURVEY.md §4.4-g). Backfills pass it explicitly.
@@ -77,22 +80,24 @@ object Cleanup {
           poster: Map[String, String] => Boolean = _ => true): Result = {
     val t0 = System.nanoTime()
     try {
-      val partitioned = isDatePartitioned(spark, tableDir, dateCol)
-      val effAsOf = asOf.getOrElse(deriveAsOf(spark, tableDir, dateCol, partitioned))
+      val dir = graft.util.NioLocalFileSystem.forkFree(
+        tableDir, spark.sparkContext.hadoopConfiguration)
+      val partitioned = isDatePartitioned(spark, dir, dateCol)
+      val effAsOf = asOf.getOrElse(deriveAsOf(spark, dir, dateCol, partitioned))
       val result =
         if (partitioned) {
           val (rows, parts) =
-            Sinks.retentionDropPartitions(spark, tableDir, dateCol, effAsOf, days)
+            Sinks.retentionDropPartitions(spark, dir, dateCol, effAsOf, days)
           Result(rows, parts, (System.nanoTime() - t0) / 1e9, partitionDrop = true)
         } else {
           // non-partitioned fallback: staged rewrite + atomic swap
-          val df = spark.read.parquet(tableDir)
+          val df = spark.read.parquet(dir)
           val total = df.count()
           val kept = df.filter(Clock.retentionKeep(col(dateCol), lit(effAsOf), days))
-          val staged = s"${tableDir}_retained"
+          val staged = s"${dir}_retained"
           kept.write.mode(SaveMode.Overwrite).parquet(staged)
           val nKept = spark.read.parquet(staged).count()
-          Sinks.replaceDir(spark, staged, tableDir)
+          Sinks.replaceDir(spark, staged, dir)
           Result(total - nKept, 0L, (System.nanoTime() - t0) / 1e9, partitionDrop = false)
         }
       val m = Notify.RunMetrics(tableDir.split("/").last, isFileFailed = false, "",

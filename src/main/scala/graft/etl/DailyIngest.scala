@@ -42,6 +42,14 @@ import graft.util.Retry
   *
   * Failure at any stage produces a failure notification and rethrows
   * (main.py:624-636 semantics, minus the silent swallow).
+  *
+  * File I/O: a `workDir` or `inputDir` on a local file system (a plain
+  * path or `file:`) is moved onto `niocrc://`
+  * ([[graft.util.NioLocalFileSystem.forkFree]]), so the lock, every phase's
+  * reads and writes, the archive and the source delete go through the
+  * fork-free checksummed local file system: the same files and `.crc`
+  * siblings as `file://`, without a `chmod` subprocess per file and
+  * directory. Any other file system is used as given.
   */
 object DailyIngest {
 
@@ -68,19 +76,21 @@ object DailyIngest {
     */
   def runLocked(spark: SparkSession, inputDir: String, date: java.time.LocalDate,
                 workDir: String, retentionDays: Int = 4,
-                poster: Map[String, String] => Boolean = _ => true): Option[Notify.RunMetrics] =
-    graft.util.SingleFlight.tryLocked(spark, s"$workDir/.graft_ingest.lock") {
-      run(spark, inputDir, date, workDir, retentionDays, poster)
+                poster: Map[String, String] => Boolean = _ => true): Option[Notify.RunMetrics] = {
+    val work = forkFree(spark, workDir)
+    graft.util.SingleFlight.tryLocked(spark, s"$work/.graft_ingest.lock") {
+      run(spark, inputDir, date, work, retentionDays, poster)
     }
+  }
 
   /** Run the full pipeline for `date`. Returns the success metrics (and has
     * notified via `poster`). */
   def run(spark: SparkSession, inputDir: String, date: java.time.LocalDate,
           workDir: String, retentionDays: Int = 4,
           poster: Map[String, String] => Boolean = _ => true): Notify.RunMetrics = {
-    val lay = Layout(workDir)
+    val lay = Layout(forkFree(spark, workDir))
     val t0 = System.nanoTime()
-    val fileName = Sources.dailyFile(spark, inputDir, date)
+    val fileName = Sources.dailyFile(spark, forkFree(spark, inputDir), date)
     try {
       val file = fileName.getOrElse(
         throw new IllegalStateException(s"no daily file for $date under $inputDir"))
@@ -174,6 +184,9 @@ object DailyIngest {
         throw e
     }
   }
+
+  private def forkFree(spark: SparkSession, dir: String): String =
+    graft.util.NioLocalFileSystem.forkFree(dir, spark.sparkContext.hadoopConfiguration)
 
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)

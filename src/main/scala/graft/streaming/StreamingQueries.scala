@@ -479,15 +479,21 @@ object StreamingQueries {
           // streaming queries keep running on the pool threads
           // (shutdown() does not cancel running tasks) and would continue
           // writing sinks/checkpoints after this method has exited. Stop
-          // them by name and wait for the pool to wind down so no drain
-          // outlives the call (the next invocation's stop-by-name + rm
-          // guard remains a backstop, not the contract).
-          names.foreach { n =>
+          // them by name and wait for the pool to wind down. Best effort:
+          // a sibling that registers its query after a sweep escapes it,
+          // so a timed-out wait says so and sweeps once more; the next
+          // invocation's stop-by-name + rm guard is the contract.
+          def stopByName(): Unit = names.foreach { n =>
             spark.streams.active.filter(q => Option(q.name).contains(n))
               .foreach(q => try q.stop() catch { case _: Throwable => () })
           }
+          stopByName()
           pool.shutdown()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+          if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)) {
+            System.err.println(s"[streamDqChecks] drains ${names.mkString(", ")} still " +
+              "running 60 s after a failure; stopping them by name again")
+            stopByName()
+          }
           throw e
       } finally pool.shutdown()
     val checks = rowLocal.crossJoin(fk).crossJoin(temporal).select(expr(

@@ -17,7 +17,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * behind the pair's driver-session elevation.
   *
   * Prints the system-wide fork count attributable to each op class, for
-  * the stock RawLocalFileSystem vs [[graft.util.NioLocalFileSystem]].
+  * the stock RawLocalFileSystem vs [[graft.util.NioLocalFileSystem]] and
+  * its checksummed form [[graft.util.NioChecksumFileSystem]].
   */
 object ForkAudit {
   private def forks(): Long =
@@ -60,5 +61,9 @@ object ForkAudit {
     val nio = new graft.util.NioLocalFileSystem()
     nio.initialize(java.net.URI.create("nio:///"), conf)
     audit("nio", nio, new java.io.File(tmp, "nio"))
+
+    val crc = new graft.util.NioChecksumFileSystem()
+    crc.initialize(java.net.URI.create("niocrc:///"), conf)
+    audit("niocrc", crc, new java.io.File(tmp, "niocrc"))
   }
 }

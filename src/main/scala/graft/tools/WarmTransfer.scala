@@ -36,15 +36,24 @@ object WarmTransfer {
     "q_allpairs_cosine")
 
   /** Multiset of physical join/exchange/aggregate node names in the FINAL
-    * (post-AQE) executed plan — the scale-divergence signature.
+    * (post-AQE) executed plan — the scale-divergence signature. Counts
+    * whole node names, so `Exchange` (a shuffle) is not also counted for
+    * each `BroadcastExchange`, nor `HashAggregate` for `ObjectHashAggregate`.
     */
-  private def planSignature(df: org.apache.spark.sql.DataFrame): String = {
-    val s = df.queryExecution.executedPlan.toString
+  private[graft] def planSignature(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other                    => (other.children ++ other.subqueries).flatMap(nodes)
+    })
+    val names = nodes(df.queryExecution.executedPlan).map(_.nodeName)
     val markers = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
       "BroadcastNestedLoopJoin", "CartesianProduct", "Exchange",
-      "HashAggregate", "ObjectHashAggregate", "SortAggregate", "Generate",
-      "Window")
-    markers.map(m => m -> s.sliding(m.length).count(_ == m))
+      "BroadcastExchange", "HashAggregate", "ObjectHashAggregate",
+      "SortAggregate", "Generate", "Window")
+    markers.map(m => m -> names.count(_ == m))
       .filter(_._2 > 0)
       .map { case (m, n) => s"$m=$n" }.mkString(" ")
   }

@@ -4,11 +4,16 @@ import java.nio.file.{Files, Path}
 import java.time.LocalDate
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumException, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 import graft.ops.Ingestion
+import graft.util.{NioChecksumFileSystem, NioLocalFileSystem}
 
 /** End-to-end spec for the complete daily run (SURVEY.md §3.1): a
   * reference-shaped zip of 520-char lineitem records flows through find →
@@ -196,4 +201,80 @@ class DailyIngestSpec extends SparkSpec {
       assert(!Files.exists(work.resolve("final_staged")), s"staging left behind: $state")
     }
   }
+
+  // --- fork-free local I/O -------------------------------------------------
+
+  /** Data files under `dir`: regular files that are not dot- or
+    * underscore-prefixed (checksums, markers). */
+  private def dataFiles(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator.asScala.filter(Files.isRegularFile(_)).filterNot { p =>
+      val n = p.getFileName.toString
+      n.startsWith(".") || n.startsWith("_")
+    }.toSeq
+    finally walk.close()
+  }
+
+  test("a run writes every data file with its .crc sibling, and reads verify it") {
+    val work = Files.createTempDirectory("crc_work").resolve("w")
+    DailyIngest.run(spark, zipDay(Day1, Day1Lines), Day1, work.toString)
+    Seq("final", "agg/sku_daily", "agg/sales_daily").foreach { d =>
+      val files = dataFiles(work.resolve(d))
+      assert(files.nonEmpty, s"$d holds no data file")
+      files.foreach { f =>
+        assert(Files.isRegularFile(f.resolveSibling(s".${f.getFileName}.crc")), s"$f has no .crc")
+      }
+    }
+
+    // one flipped byte in a final/ data file fails a read through the run's path
+    val victim = dataFiles(work.resolve("final")).head
+    val bytes = Files.readAllBytes(victim)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+    Files.write(victim, bytes)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val runPath = new org.apache.hadoop.fs.Path(NioLocalFileSystem.forkFree(victim.toString, conf))
+    assert(runPath.toUri.getScheme == NioLocalFileSystem.CRC_SCHEME)
+    val in = runPath.getFileSystem(conf).open(runPath)
+    try intercept[ChecksumException](in.readFully(new Array[Byte](bytes.length)))
+    finally in.close()
+    val e = intercept[Exception] {
+      spark.read.parquet(NioLocalFileSystem.forkFree(work.resolve("final").toString, conf)).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), s"no ChecksumException under $e")
+  }
+
+  test("forkFree moves local paths onto niocrc and leaves other file systems alone") {
+    val conf = new Configuration()
+    val dir = Files.createTempDirectory("forkfree").toString
+    val mapped = NioLocalFileSystem.forkFree(dir, conf)
+    assert(mapped == s"niocrc://$dir")
+    assert(NioLocalFileSystem.forkFree(s"file://$dir", conf) == mapped)
+    assert(NioLocalFileSystem.forkFree(s"file:$dir", conf) == mapped)
+    assert(NioLocalFileSystem.forkFree(mapped, conf) == mapped)
+    assert(conf.get("fs.niocrc.impl") == classOf[NioChecksumFileSystem].getName)
+    // the mapped path names the same directory: what one scheme writes the
+    // other lists
+    Files.writeString(java.nio.file.Paths.get(dir, "probe"), "x")
+    val p = new org.apache.hadoop.fs.Path(mapped)
+    assert(p.getFileSystem(conf).listStatus(p).map(_.getPath.getName).toSeq == Seq("probe"))
+
+    // an impl already registered for the scheme is kept
+    val preset = new Configuration()
+    preset.set("fs.niocrc.impl", "com.example.TracedFileSystem")
+    NioLocalFileSystem.forkFree(dir, preset)
+    assert(preset.get("fs.niocrc.impl") == "com.example.TracedFileSystem")
+
+    // a non-local scheme (hdfs://, s3a://, ... stand-in) comes back unchanged
+    conf.set("fs.graftremote.impl", classOf[DailyIngestSpec.RemoteStub].getName)
+    assert(NioLocalFileSystem.forkFree("graftremote://bucket/work/final", conf) ==
+      "graftremote://bucket/work/final")
+  }
+}
+
+object DailyIngestSpec {
+  /** A file system that is not a `LocalFileSystem`, as `hdfs://` or
+    * `s3a://` are not; the forkFree test registers it under a scheme of its
+    * own. */
+  class RemoteStub extends RawLocalFileSystem
 }
